@@ -83,7 +83,8 @@ object Targets {
     * sequential form — a stage is dirty iff forced, incomplete, or any
     * dependency is dirty), every target still lands complete before any
     * consumer reads it, and the report lists stages in deterministic
-    * topological order regardless of completion order. */
+    * topological order regardless of completion order. When a stage
+    * fails, run() rethrows its error after every sibling has settled. */
   def run(spark: SparkSession, rootDir: String, stages: Seq[Stage],
           force: Set[String] = Set.empty): RunReport = {
     val ordered = topoSort(stages)
@@ -96,6 +97,17 @@ object Targets {
       math.min(4, math.max(1, dirty.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    // Failure drain: the first stage to fail cancels its siblings'
+    // running jobs (tagged per run) and stops unstarted stages from
+    // starting; run() rethrows only once every stage has settled and
+    // the pool has terminated, so no sibling is still writing a target
+    // after it returns.
+    val sc = spark.sparkContext
+    val runTag = s"graft-targets-${java.util.UUID.randomUUID}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def checkNotFailed(stage: String): Unit = if (failure.get != null)
+      throw new java.util.concurrent.CancellationException(
+        s"stage '$stage' cancelled: another stage failed")
     try {
       val done = scala.collection.mutable.Map.empty[String, scala.concurrent.Future[Unit]]
       ordered.foreach { s =>
@@ -104,17 +116,29 @@ object Targets {
           done(s.name) = scala.concurrent.Future
             .sequence(depFs)
             .map { _ =>
-              spark.sparkContext.setJobDescription(s"target: ${s.name}")
-              val ups = s.deps.map(d =>
-                d -> spark.read.parquet(targetPath(rootDir, d))).toMap
-              s.build(spark, ups).write.mode("overwrite")
-                .parquet(targetPath(rootDir, s.name))
+              checkNotFailed(s.name)
+              sc.setJobDescription(s"target: ${s.name}")
+              sc.addJobTag(runTag)
+              try {
+                val ups = s.deps.map(d =>
+                  d -> spark.read.parquet(targetPath(rootDir, d))).toMap
+                val out = s.build(spark, ups)
+                checkNotFailed(s.name)
+                out.write.mode("overwrite").parquet(targetPath(rootDir, s.name))
+              } finally sc.removeJobTag(runTag)
+            }
+            .andThen { case scala.util.Failure(e) =>
+              if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(runTag)
             }
         }
       }
       done.values.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+        scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+    Option(failure.get).foreach(e => throw e)
     RunReport(ordered.collect { case s if dirty(s.name) => s.name },
       ordered.collect { case s if !dirty(s.name) => s.name })
   }

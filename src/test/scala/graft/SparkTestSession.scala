@@ -2,28 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM), built by
+  * the engine's own [[GraftSession.builder]] so tests run under exactly
+  * the production confs; only test-only options are added here.
+  */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // explicit, so tests never follow SPARK_GRAFT_SHUFFLE_PARTITIONS
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Regression gate for runtime codegen health: a custom Expression
       // whose generated Java fails to compile normally falls back to
       // interpreted execution silently (only an ERROR log). Disabling
       // the fallback turns any codegen compile failure into a test
       // failure — plan-string audits can't see these.
       .config("spark.sql.codegen.fallback", "false")
-      // mirror GraftSession: InferFiltersFromGenerate re-derives
-      // expensive array expressions in below-Generate filters
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -155,6 +155,30 @@ class TargetsSpec extends AnyFunSuite {
       Targets.targetPath(root, "boom") + "/_SUCCESS")))
   }
 
+  test("a failing stage settles its concurrent sibling before run() rethrows") {
+    // "boom" fails at once while its independent sibling "slow" is
+    // still building. run() must not return until "slow" has settled,
+    // and "slow" must not go on to write its target afterwards.
+    val root = java.nio.file.Files.createTempDirectory("targets").toString
+    val slowSettled = new java.util.concurrent.atomic.AtomicLong
+    val stages = Seq(
+      Stage("slow", Nil, (s, _) => {
+        Thread.sleep(500)
+        slowSettled.set(System.nanoTime)
+        s.range(10).toDF()
+      }),
+      Stage("boom", Nil, (_, _) => throw new RuntimeException("boom")))
+    val err = intercept[RuntimeException](Targets.run(spark, root, stages))
+    val returned = System.nanoTime
+    assert(err.getMessage.contains("boom"))
+    assert(slowSettled.get != 0 && slowSettled.get < returned,
+      "run() returned while a sibling stage was still running")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    Thread.sleep(500)
+    assert(!new java.io.File(Targets.targetPath(root, "slow")).exists,
+      "a sibling of the failed stage wrote its target")
+  }
+
   test("topoSort orders by dependency regardless of declaration order and rejects cycles") {
     val counters = Seq.fill(3)(new AtomicInteger)
     val shuffled = dag(counters: _*).reverse
