@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder("4")
-      .appName("graft-test")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       // explicit, so tests never follow SPARK_GRAFT_SHUFFLE_PARTITIONS
       .config("spark.sql.shuffle.partitions", "4")
