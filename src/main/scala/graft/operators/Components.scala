@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * once per round in a growing logical tree — at high diameter the
   * plan STRING alone OOMs the driver (found by the differential
   * fuzz; AQE renders the plan on every update). LogicalRDD leaves
-  * keep every round's plan O(1); superseded blocks are reaped by the
-  * ContextCleaner.
+  * keep every round's plan O(1); a round's blocks are released once
+  * the next round is materialized, the rest when the call returns.
   */
 object Components {
 
@@ -78,17 +78,16 @@ object Components {
   /** @param edges (id_a, id_b) undirected pairs
     * @return (node, component) — component = min node id reachable */
   def connectedComponents(edges: DataFrame, aCol: String = "id_a",
-                          bCol: String = "id_b", maxIter: Int = 15): DataFrame = {
-    val input = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
+                          bCol: String = "id_b",
+                          maxIter: Int = 15): DataFrame = Materialize.scoped { m =>
+    val input = m.checkpoint(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
     // every endpoint must appear in the result, including self-loop-only
     // and about-to-be-contracted nodes
-    val nodes = sym(input).select(col("src").as("node")).distinct().localCheckpoint()
-    var cur = input.filter(col("src") =!= col("dst"))
+    val nodes = m.checkpoint(sym(input).select(col("src").as("node")).distinct())
+    var cur = m.checkpoint(input.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     var i = 0
     var curSig = fingerprint(cur)
@@ -97,7 +96,10 @@ object Components {
       // checkpoint between the stars too: smallStar references its
       // input ~4x (sym twice, nbrMin, join probe) and would otherwise
       // re-evaluate the large-star join per reference
-      val next = smallStar(largeStar(cur).localCheckpoint()).localCheckpoint()
+      val large = m.checkpoint(largeStar(cur))
+      val next = m.checkpoint(smallStar(large))
+      m.release(large)
+      m.release(cur)
       // both sides are canonically-oriented distinct sets, so equal
       // fingerprints mean a fixpoint — one agg per round instead of
       // count + except (which doubles per-round cost at large |E|)

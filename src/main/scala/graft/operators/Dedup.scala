@@ -183,26 +183,24 @@ object Dedup {
     * on the old flooring must pick a divisible config explicitly. */
   def minHashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                 threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
+                 threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = Materialize.scoped { m =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     // persisted: the banding branch and the Jaccard-verify branch both
     // read it — without the cache the tokenize+shingle+minhash scan
     // (the dominant narrow stage) runs twice
-    val sig = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+    val sig = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("minhash", minhashSig(col("__sh"), numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("minhash", minhashSig(col("__sh"), numHashes)))
 
     val banded = bandBuckets(sig, idCol, numHashes, bands)
 
     val pairs = pairsFromBuckets(banded, Seq("band", "bh"), idCol, maxBucket)
-    // materialize the (tiny) verified pairs eagerly, then release the
-    // signature cache — it must not outlive the call (a long session
-    // running many dedups would otherwise accumulate executor memory)
-    val result = verifyJaccard(pairs, sig.select(col(idCol), col("__sh")),
+    // materialize the (tiny) verified pairs eagerly before the scope
+    // releases the signature cache — it must not outlive the call (a
+    // long session running many dedups would otherwise accumulate
+    // executor memory)
+    verifyJaccard(pairs, sig.select(col(idCol), col("__sh")),
       idCol, threshold).localCheckpoint()
-    sig.unpersist()
-    result
   }
 
   /** LSH band buckets from a `minhash` signature column: each of the
@@ -294,18 +292,15 @@ object Dedup {
     * (oracle scale or a capped sample) and the require() enforces it. */
   def bruteForceJaccard(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, threshold: Double,
-                        maxDocs: Int = 2000): DataFrame = {
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                        maxDocs: Int = 2000): DataFrame = Materialize.scoped { m =>
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
     require(sh.count() <= maxDocs,
       s"bruteForceJaccard is verification-scale only (cap $maxDocs docs)")
     val pairs = pairsFromBuckets(
       sh.select(lit(0).as("__all"), col(idCol)), Seq("__all"), idCol,
       maxBucket = maxDocs)
-    val result = verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
-    sh.unpersist()
-    result
+    verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
   }
 
   /** Embedding-cosine near-dup pairs with CAPPED block-key candidate
@@ -391,10 +386,9 @@ object Dedup {
     * compared — a cheap literal analog of prefix filtering. */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, threshold: Double = 0.5,
-                   maxBucket: Int = 1000): DataFrame = {
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                   maxBucket: Int = 1000): DataFrame = Materialize.scoped { m =>
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
     // candidates = docs sharing their minimum shingle hash (a 1-hash
     // MinHash: P[shared min] ≈ jaccard, so real near-dups gate in and
     // unrelated docs land in distinct buckets) within a length band
@@ -402,9 +396,7 @@ object Dedup {
       (size(col("__sh")) / 10).cast("int").as("lenb"),
       array_min(transform(col("__sh"), s => xxhash64(s))).as("pref"))
     val pairs = pairsFromBuckets(gated, Seq("lenb", "pref"), idCol, maxBucket)
-    val result = verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
-    sh.unpersist() // see minHashLsh: the shingle cache must not outlive the call
-    result
+    verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
   }
 
   /** EXACT set-similarity self-join via PREFIX FILTERING — the
@@ -442,7 +434,7 @@ object Dedup {
     * the same shuffle shape the pair generator itself runs. */
   def prefixFilterJaccard(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 3, threshold: Double = 0.5,
-                          maxBucket: Int = 10000): DataFrame = {
+                          maxBucket: Int = 10000): DataFrame = Materialize.scoped { m =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // the exactness-critical bounds below are computed in INTEGER
@@ -460,9 +452,8 @@ object Dedup {
     // bound is exact 64-bit (s ≤ shingles/doc, so s·tPpm ≤ ~1e12 «
     // 2^63).
     val tPpm = math.floor(threshold * 1e6).toLong
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
     // materializes the cache (sh feeds candidate gen AND both verify
     // sides) and sizes the verify-join pin below in one cheap job
     val nRows = sh.count()
@@ -484,13 +475,11 @@ object Dedup {
     // in-bucket pair generation AND the length filter: buckets carry
     // (id, set size) structs, sorted by id (ids are unique, so the
     // struct sort IS the id sort)
-    val buckets = prefix.groupBy("__g")
+    val buckets = m.persist(prefix.groupBy("__g")
       .agg(sort_array(collect_set(struct(col(idCol).as("id"), col("__s").as("s")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("ids")) >= 2))
     val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
     if (biggest > maxBucket) {
-      buckets.unpersist(); sh.unpersist()
       throw new IllegalStateException(
         s"prefixFilterJaccard: largest prefix bucket has $biggest docs > maxBucket=$maxBucket; " +
           "dropping it would break the exact-result contract. Raise threshold (shorter " +
@@ -524,16 +513,13 @@ object Dedup {
       val s = sh.select(col(idCol).as(n), col("__sh").as(v))
       if (pin) s.hint("merge") else s
     }
-    val result = pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
+    pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
       .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard",
         col("__i").cast("double") / (col("sa") + col("sb") - col("__i")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    result
   }
 
   /** EXACT set-CONTAINMENT join — the asymmetric sibling of
@@ -568,13 +554,12 @@ object Dedup {
     * a df ceiling first, or raise the cap). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.8,
-                       maxBucket: Int = 10000): DataFrame = {
+                       maxBucket: Int = 10000): DataFrame = Materialize.scoped { m =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val tPpm = math.floor(threshold * 1e6).toLong
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
     val nRows = sh.count()
     val ex = sh.select(col(idCol), size(col("__sh")).as("__s"),
       explode(col("__sh")).as("__g"))
@@ -588,14 +573,12 @@ object Dedup {
       .withColumn("__rk", row_number().over(w))
       .withColumn("__p",
         expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
-    val buckets = flagged.groupBy("__g")
+    val buckets = m.persist(flagged.groupBy("__g")
       .agg(sort_array(collect_set(struct(col(idCol).as("id"),
         col("__s").as("s"), col("__p").as("p")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("ids")) >= 2))
     val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
     if (biggest > maxBucket) {
-      buckets.unpersist(); sh.unpersist()
       throw new IllegalStateException(
         s"containmentPairs: largest shingle bucket has $biggest docs > maxBucket=$maxBucket; " +
           "dropping it would break the exact-result contract. Strip stop-shingles past a df " +
@@ -627,7 +610,7 @@ object Dedup {
     // of two integers — engine-reproducible), the prefixFilterJaccard
     // discipline: the ppm constant gates only the lossless candidate
     // bounds, where FLOOR keeps them a superset
-    val result = pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
+    pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
       .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("containment", col("__i").cast("double") /
         least(col("sa"), col("sb")).cast("double"))
@@ -635,9 +618,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(col("containment"), 6).as("containment"))
       .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    result
   }
 
   /** The 100 TB configuration of the near-dup slot: MinHash/LSH
@@ -670,13 +650,12 @@ object Dedup {
   def minhashPrunedJaccard(df: DataFrame, idCol: String, textCol: String,
                            shingleN: Int = 3, threshold: Double = 0.5,
                            numHashes: Int = 32, bands: Int = 16,
-                           maxBucket: Int = 10000): DataFrame = {
+                           maxBucket: Int = 10000): DataFrame = Materialize.scoped { m =>
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
         array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("__s", size(col("__sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__s", size(col("__sh"))))
     val nRows = sh.count() // materializes the cache, sizes the join pin
     val banded = bandBuckets(
       sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
@@ -690,8 +669,7 @@ object Dedup {
     // numbers ALSO ride the returned frame as the named
     // NearDupDropObservation (withDropMetric), landing in bench/scale
     // artifacts next to spill instead of only a stderr line.
-    val buckets = bucketLists(banded, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val buckets = m.persist(bucketLists(banded, Seq("band", "bh"), idCol))
     val (db, dr, mx) = dropStats(buckets, maxBucket)
     warnDrops(db, dr, mx, maxBucket, "minhashPrunedJaccard")
     val pairs = pairsFromLists(buckets, maxBucket)
@@ -710,8 +688,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
     withDropMetric(result, db, dr, mx)
   }
 
@@ -747,22 +723,20 @@ object Dedup {
   def minhashPrunedContainment(df: DataFrame, idCol: String, textCol: String,
                                shingleN: Int = 3, threshold: Double = 0.8,
                                numHashes: Int = 32,
-                               maxBucket: Int = 10000): DataFrame = {
+                               maxBucket: Int = 10000): DataFrame = Materialize.scoped { m =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+    val sh = m.persist(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
         array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("__s", size(col("__sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__s", size(col("__sh"))))
     val nRows = sh.count()
     // bands = numHashes -> one hash per band: a single shared minhash
     // value anywhere in the signature makes a candidate
     val banded = bandBuckets(
       sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
       idCol, numHashes, bands = numHashes)
-    val buckets = bucketLists(banded, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val buckets = m.persist(bucketLists(banded, Seq("band", "bh"), idCol))
     val (db, dr, mx) = dropStats(buckets, maxBucket)
     warnDrops(db, dr, mx, maxBucket, "minhashPrunedContainment")
     val pairs = pairsFromLists(buckets, maxBucket)
@@ -782,8 +756,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(col("containment"), 6).as("containment"))
       .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
     withDropMetric(result, db, dr, mx)
   }
 
@@ -1170,10 +1142,9 @@ object Dedup {
                                 idCol: String, textCol: String,
                                 shingleN: Int = 3, numHashes: Int = 32,
                                 bands: Int = 16, threshold: Double = 0.7,
-                                maxBucket: Int = 100000): DataFrame = {
+                                maxBucket: Int = 100000): DataFrame = Materialize.scoped { m =>
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val bsig = signatures(batch, idCol, textCol, shingleN, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bsig = m.persist(signatures(batch, idCol, textCol, shingleN, numHashes))
     val nBatch = bsig.count() // materializes the cache, sizes the pins
     val pinBig = nBatch > BroadcastSafeCorpusRows
     def pin(df: DataFrame) = if (pinBig) df.hint("merge") else df
@@ -1195,9 +1166,8 @@ object Dedup {
     // minhashPrunedJaccard discipline — an over-cap bucket here is a
     // spam cluster whose history matches would be lost; the numbers
     // ride the returned frame as the named observation)
-    val hBuckets = hHit.groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_set(col("__hid"))).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hBuckets = m.persist(hHit.groupBy(col("band"), col("bh"))
+      .agg(sort_array(collect_set(col("__hid"))).as("ids")))
     val (db, dr, mx) = dropStats(hBuckets, maxBucket)
     warnDrops(db, dr, mx, maxBucket, "incrementalNearDupIndexed")
     val cand = bBands.join(pin(hBuckets.filter(size(col("ids")) <= maxBucket)),
@@ -1218,8 +1188,7 @@ object Dedup {
     // over-cap BATCH buckets get the same loud drop accounting the
     // history path has — a silently-capped batch bucket would lose
     // dup_batch pairs with no warning and no observation (ADVICE r14).
-    val bLists = bucketLists(bBands, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bLists = m.persist(bucketLists(bBands, Seq("band", "bh"), idCol))
     val (bdb, bdr, bmx) = dropStats(bLists, maxBucket)
     warnDrops(bdb, bdr, bmx, maxBucket,
       "incrementalNearDupIndexed (batch-internal)")
@@ -1246,9 +1215,6 @@ object Dedup {
         coalesce(col("component"), col(idCol)).as("batch_component"),
         coalesce(col("__n_hist"), lit(0L)).as("n_hist_matches"))
       .localCheckpoint()
-    hBuckets.unpersist()
-    bLists.unpersist()
-    bsig.unpersist()
     // ONE observation folding both candidate paths' drops (history
     // band buckets + batch-internal buckets)
     withDropMetric(result, db + bdb, dr + bdr, math.max(mx, bmx))

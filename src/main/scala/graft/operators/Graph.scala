@@ -75,16 +75,15 @@ object Graph {
     * @param seeds single-column ("node") frame of BFS sources.
     * @return (node, hops) for every node within `maxHops` of a seed. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-              seeds: DataFrame, maxHops: Int): DataFrame = {
+              seeds: DataFrame, maxHops: Int): DataFrame = Materialize.scoped { m =>
     require(maxHops >= 1)
-    val e = edges
+    val e = m.persist(edges
       .select(col(srcCol).cast("long").as("node"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     e.count()
     val spark = edges.sparkSession
     // AQE partition COALESCING off for the state-building actions:
-    // the re-asserted hash claim (checkpointHashPartitioned's safety
+    // the re-asserted hash claim (claimHashPartitioned's safety
     // contract) requires the physical layout to be exactly
     // hash(node) % P, which coalesced shuffle reads break. Restored
     // in the finally; the returned frame is fully materialized
@@ -94,11 +93,11 @@ object Graph {
     val prevCoalesce = spark.conf.getOption(coalesceKey)
     spark.conf.set(coalesceKey, "false")
     try {
-      var reached = org.apache.spark.sql.GraftBridge.checkpointHashPartitioned(
-        seeds.select(col("node").cast("long").as("node")).distinct()
+      var reached = org.apache.spark.sql.GraftBridge.claimHashPartitioned(
+        m.checkpoint(seeds.select(col("node").cast("long").as("node")).distinct()
           .select(col("node"), lit(0).as("hops"))
           // seed the node-keyed physical layout the per-hop merge reuses
-          .repartition(col("node")),
+          .repartition(col("node"))),
         Seq("node"))
       var frontier = reached.select("node")
       for (t <- 1 to maxHops) {
@@ -111,14 +110,16 @@ object Graph {
         // expansion, which shrinks as the graph saturates) moves;
         // first-visit wins (existing hops beat this hop's label); the
         // checkpoint pins ONE evaluation per hop, truncates lineage,
-        // and re-asserts the layout claim a FullOuter join drops
-        reached = org.apache.spark.sql.GraftBridge.checkpointHashPartitioned(
-          reached.join(cand, Seq("node"), "full_outer")
-            .select(col("node"), coalesce(col("hops"), col("__t")).as("hops")),
+        // and re-asserts the layout claim a FullOuter join drops; the
+        // last hop's checkpoint is the result, so it stays out of the
+        // scope
+        val merged = reached.join(cand, Seq("node"), "full_outer")
+          .select(col("node"), coalesce(col("hops"), col("__t")).as("hops"))
+        reached = org.apache.spark.sql.GraftBridge.claimHashPartitioned(
+          if (t < maxHops) m.checkpoint(merged) else merged.localCheckpoint(),
           Seq("node"), sortedWithinPartitions = true)
         frontier = reached.filter(col("hops") === t).select("node")
       }
-      e.unpersist()
       reached
     } finally {
       prevCoalesce match {
@@ -160,16 +161,13 @@ object Graph {
     *
     * @return (node, hub_ppm, auth_ppm) after `iters` iterations. */
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
-              iters: Int = 3): DataFrame = {
+              iters: Int = 3): DataFrame = Materialize.scoped { m =>
     require(iters >= 1)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eRaw = edges
+    val eRaw = m.persist(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(lvl)
-    val spine = eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
-      .distinct()
-      .persist(lvl)
+      .distinct())
+    val spine = m.persist(eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
+      .distinct())
     val nNodes = spine.count()
     // past the broadcast-safe node count the edge list re-caches TWICE,
     // pre-partitioned+sorted on src and on dst (the GraphX mirror-table
@@ -183,11 +181,11 @@ object Graph {
     // moves, so the re-layout would be pure overhead — skipped.
     val (eSrc, eDst) =
       if (nNodes > Dedup.BroadcastSafeCorpusRows) {
-        val es = eRaw.repartition(col("src")).sortWithinPartitions("src").persist(lvl)
+        val es = m.persist(eRaw.repartition(col("src")).sortWithinPartitions("src"))
         es.count()
-        val ed = es.repartition(col("dst")).sortWithinPartitions("dst").persist(lvl)
+        val ed = m.persist(es.repartition(col("dst")).sortWithinPartitions("dst"))
         ed.count()
-        eRaw.unpersist()
+        m.release(eRaw)
         (es, ed)
       } else (eRaw, eRaw)
     def maxNorm(df: DataFrame, c: String): DataFrame = {
@@ -202,20 +200,16 @@ object Graph {
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
       auths = maxNorm(spine.join(aRaw, Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("a")), "a")
-      auths = auths.localCheckpoint()
+      auths = m.checkpoint(auths)
       val hRaw = eDst.join(auths.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
       hubs = maxNorm(spine.join(hRaw, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).as("h")), "h")
-      hubs = hubs.localCheckpoint()
+      hubs = m.checkpoint(hubs)
     }
-    val result = hubs.join(auths, "node")
+    hubs.join(auths, "node")
       .select(col("node"), col("h").as("hub_ppm"), col("a").as("auth_ppm"))
       .localCheckpoint()
-    eSrc.unpersist()
-    eDst.unpersist()
-    spine.unpersist()
-    result
   }
 
   /** Per-node TRIANGLE counts over an undirected graph — the local
@@ -241,28 +235,27 @@ object Graph {
     * replays orientation, wedges and closure with tuple comparisons.
     *
     * @return (node, n_triangles) for every node in ≥ 1 triangle. */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
+  def triangleCount(edges: DataFrame, srcCol: String,
+                    dstCol: String): DataFrame = Materialize.scoped { m =>
+    val und = m.persist(edges
       .select(col(srcCol).cast("long").as("x"), col(dstCol).cast("long").as("y"))
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val deg = und.select(col("a").as("node")).union(und.select(col("b")))
       .groupBy("node").agg(count(lit(1)).as("dg"))
     val keyed = und
       .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
-    val ord = keyed.select(
+    val ord = m.persist(keyed.select(
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
           .otherwise(col("b")).as("src"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b"))
           .otherwise(col("a")).as("dst"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
-          .otherwise(col("da")).as("kdg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(col("da")).as("kdg")))
     ord.count() // materialize; und no longer needed after this
-    und.unpersist()
+    m.release(und)
     val x = ord.select(col("src").as("u"), col("dst").as("v"), col("kdg").as("kv"))
     val y = ord.select(col("src").as("u"), col("dst").as("w"), col("kdg").as("kw"))
     val wedges = x.join(y, Seq("u"))
@@ -270,31 +263,26 @@ object Graph {
     val tris = wedges.join(
         ord.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
       .select(col("u"), col("v"), col("w"))
-    val result = tris.select(col("u").as("node"))
+    tris.select(col("u").as("node"))
       .unionByName(tris.select(col("v").as("node")))
       .unionByName(tris.select(col("w").as("node")))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
       .localCheckpoint()
-    ord.unpersist()
-    result
   }
 
   def pagerankPpm(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 4, dampingPpm: Long = 850000L,
                   checkpointEvery: Int = 2,
-                  redistributeDangling: Boolean = false): DataFrame = {
+                  redistributeDangling: Boolean = false): DataFrame = Materialize.scoped { m =>
     require(iters >= 1 && dampingPpm >= 0 && dampingPpm <= 1000000L)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eRaw = edges
+    val eRaw = m.persist(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(lvl)
+      .distinct())
     val deg = eRaw.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    val spineRaw = eRaw.select(col("src").as("node"))
+    val spineRaw = m.persist(eRaw.select(col("src").as("node"))
       .union(eRaw.select(col("dst")))
       .distinct()
-      .join(deg, Seq("node"), "left")
-      .persist(lvl)
+      .join(deg, Seq("node"), "left"))
     val nNodes = spineRaw.count() // materializes the caches, sizes the pin
     val pin = nNodes > Dedup.BroadcastSafeCorpusRows
     // on the pinned (merge-join) path the edge list and spine re-cache
@@ -309,10 +297,10 @@ object Graph {
     // be pure overhead — the raw caches are kept as-is.
     val (e, spine) =
       if (pin) {
-        val ep = eRaw.repartition(col("src")).sortWithinPartitions("src").persist(lvl)
-        val sp = spineRaw.repartition(col("node")).sortWithinPartitions("node").persist(lvl)
+        val ep = m.persist(eRaw.repartition(col("src")).sortWithinPartitions("src"))
+        val sp = m.persist(spineRaw.repartition(col("node")).sortWithinPartitions("node"))
         ep.count(); sp.count()
-        eRaw.unpersist(); spineRaw.unpersist()
+        m.release(eRaw); m.release(spineRaw)
         (ep, sp)
       } else (eRaw, spineRaw)
     val base = 1000000L - dampingPpm
@@ -346,14 +334,11 @@ object Graph {
               .as("r"))
         }
       if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = false)
+        ranks = m.checkpoint(ranks, eager = false)
     }
-    val result = ranks
+    ranks
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"),
         col("r").as("rank_ppm"))
       .localCheckpoint()
-    e.unpersist()
-    spine.unpersist()
-    result
   }
 }

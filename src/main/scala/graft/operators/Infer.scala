@@ -108,16 +108,21 @@ object Infer {
   def trainLogistic(docs: DataFrame, idCol: String, textCol: String,
                     label: Column, buckets: Int = 64, iters: Int = 3,
                     lrDiv: Long = 8L, salt: String = "fh",
-                    charNgram: Int = 0): (IndexedSeq[Long], Long) = {
+                    charNgram: Int = 0): (IndexedSeq[Long], Long) = Materialize.scoped { m =>
     require(buckets > 0 && 4096 % buckets == 0,
       s"buckets must divide 4096 (3 hex digits); got $buckets")
     require(iters >= 1 && lrDiv >= 1, "iters and lrDiv must be positive")
     val bucket = (conv(substring(md5(concat(lit(salt), col("__tok"))), 1, 3), 16, 10)
       .cast("long") % buckets).cast("int")
-    // one doc-keyed shuffle builds the persisted per-doc feature map;
+    // one doc-keyed shuffle builds the materialized per-doc feature map;
     // the bias pseudo-feature (bucket -1, x 1) rides inside it so each
-    // step's gradient explode covers bias and weights in one pass
-    val docFeats = docs
+    // step's gradient explode covers bias and weights in one pass.
+    // Checkpointed (not persisted): same materialize-once, but the
+    // LOGICAL plan truncates to a LogicalRDD leaf — every iteration
+    // re-analyzes its step plan from docFeats, and with the full
+    // explode/groupBy build tree under it the driver re-walked that
+    // tree once per iteration
+    val docFeats = m.checkpoint(docs
       .select(col(idCol), label.cast("boolean").as("__y"),
         explode(featTokens(col(textCol), charNgram)).as("__tok"))
       .filter(length(col("__tok")) > 0)
@@ -127,13 +132,7 @@ object Infer {
       .groupBy(col(idCol), col("__y"))
       .agg(map_concat(
         map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-        map(lit(-1), lit(1L))).as("__m"))
-      // localCheckpoint (not persist): same materialize-once, but the
-      // LOGICAL plan truncates to a LogicalRDD leaf — every iteration
-      // re-analyzes its step plan from docFeats, and with the full
-      // explode/groupBy build tree under it the driver re-walked that
-      // tree once per iteration (driver-bound per the r18 sampling)
-      .localCheckpoint()
+        map(lit(-1), lit(1L))).as("__m")))
     val nDocs = docFeats.count() // sizes updates
     require(nDocs > 0, "trainLogistic: no docs with >= 1 token")
     var bias = 0L
@@ -184,13 +183,16 @@ object Infer {
   def trainOvr(docs: DataFrame, idCol: String, textCol: String,
                classCol: Column, buckets: Int = 64, iters: Int = 3,
                lrDiv: Long = 8L, salt: String = "fh",
-               charNgram: Int = 0): Seq[(String, IndexedSeq[Long], Long)] = {
+               charNgram: Int = 0): Seq[(String, IndexedSeq[Long], Long)] = Materialize.scoped { m =>
     require(buckets > 0 && 4096 % buckets == 0,
       s"buckets must divide 4096 (3 hex digits); got $buckets")
     require(iters >= 1 && lrDiv >= 1, "iters and lrDiv must be positive")
     val bucket = (conv(substring(md5(concat(lit(salt), col("__tok"))), 1, 3), 16, 10)
       .cast("long") % buckets).cast("int")
-    val docFeats = docs
+    // checkpointed, not persisted — see trainLogistic: iterations
+    // re-analyze their step plan per round, so the shared feature map
+    // must be a plan LEAF, not a cached explode/groupBy subtree
+    val docFeats = m.checkpoint(docs
       .select(col(idCol), classCol.cast("string").as("__y"),
         explode(featTokens(col(textCol), charNgram)).as("__tok"))
       .filter(length(col("__tok")) > 0)
@@ -200,11 +202,7 @@ object Infer {
       .groupBy(col(idCol), col("__y"))
       .agg(map_concat(
         map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-        map(lit(-1), lit(1L))).as("__m"))
-      // localCheckpoint, not persist — see trainLogistic: iterations
-      // re-analyze their step plan per round, so the shared feature
-      // map must be a plan LEAF, not a cached explode/groupBy subtree
-      .localCheckpoint()
+        map(lit(-1), lit(1L))).as("__m")))
     val nDocs = docFeats.count()
     require(nDocs > 0, "trainOvr: no docs with >= 1 token")
     val classes = docFeats.select("__y").distinct().collect()

@@ -36,22 +36,20 @@ object LangModel {
     *  - the result is localCheckpoint-ed before the caches drop.
     * Nothing all-pairs, nothing driver-side beyond the 1-row V. */
   def bigramSurprisal(df: DataFrame, idCol: String, textCol: String,
-                      keepPpm: Long): DataFrame = {
+                      keepPpm: Long): DataFrame = Materialize.scoped { m =>
     val toks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 2)
     // NARROW persist: the raw (doc, w1, w2) stream caches without a
     // shuffle — the per-doc multiplicity fold isn't worth its own
     // corpus-wide shuffle (real text rarely repeats a bigram within a
     // doc; the count/sum in the final fold handles it either way)
-    val bi = toks.select(col(idCol),
+    val bi = m.persist(toks.select(col(idCol),
         explode(zip_with(
           slice(col("__toks"), lit(1), size(col("__toks")) - 1),
           slice(col("__toks"), lit(2), size(col("__toks")) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c12 = bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
+    val c12 = m.persist(bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12")))
     // materializes both caches and measures the bigram vocabulary in
     // one pass — the cost-join strategy pin below is sized by MEASURED
     // vocab rows, not a planner estimate (the Dedup
@@ -67,7 +65,7 @@ object LangModel {
       .select(col("__w1"), col("__w2"),
         expr("(__c1 + __v) div (__c12 + 1)").as("__cost"))
     val costs = if (pinMerge) costs0.hint("merge") else broadcast(costs0)
-    val result = bi.join(costs, Seq("__w1", "__w2"))
+    bi.join(costs, Seq("__w1", "__w2"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost")).as("total_cost"))
       // the ppm lift runs in DECIMAL: total_cost is a per-doc sum of
@@ -82,9 +80,6 @@ object LangModel {
         expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
       .withColumn("keep", col("mean_cost_ppm") <= keepPpm)
       .localCheckpoint()
-    bi.unpersist()
-    c12.unpersist()
-    result
   }
 
   // ──────────── frozen-model train/apply split (r15) ────────────
@@ -122,16 +117,15 @@ object LangModel {
     * pass, model-sized join sides broadcast below / merge past the
     * measured [[Dedup.BroadcastSafeCorpusRows]] pin. */
   def surprisalApplyCounts(model: DataFrame, df: DataFrame, idCol: String,
-                           textCol: String, keepPpm: Long): DataFrame = {
+                           textCol: String, keepPpm: Long): DataFrame = Materialize.scoped { m =>
     val toks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 2)
-    val bi = toks.select(col(idCol),
+    val bi = m.persist(toks.select(col(idCol),
         explode(zip_with(
           slice(col("__toks"), lit(1), size(col("__toks")) - 1),
           slice(col("__toks"), lit(2), size(col("__toks")) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
     val c12 = model.select(col("w1").as("__w1"), col("w2").as("__w2"),
       col("c12").as("__c12"))
     val nVocab = c12.count()
@@ -139,7 +133,7 @@ object LangModel {
     def pinModel(d: DataFrame) = if (pinMerge) d.hint("merge") else broadcast(d)
     val c1 = c12.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
     val vocab = c12.agg(countDistinct(col("__w2")).as("__v"))
-    val result = bi
+    bi
       .join(pinModel(c12), Seq("__w1", "__w2"), "left")
       .join(pinModel(c1), Seq("__w1"), "left")
       .crossJoin(broadcast(vocab))
@@ -152,8 +146,6 @@ object LangModel {
         expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
       .withColumn("keep", col("mean_cost_ppm") <= keepPpm)
       .localCheckpoint()
-    bi.unpersist()
-    result
   }
 
   /** The TRAIN half of [[dsirWeight]] as a persistable model: per-token
@@ -224,15 +216,13 @@ object LangModel {
     * fold ends the plan. */
   def dsirWeight(df: DataFrame, idCol: String, textCol: String,
                  targetFilter: org.apache.spark.sql.Column,
-                 keepPpm: Long, scale: Long = 1000000L): DataFrame = {
-    val toks = df.select(col(idCol), targetFilter.as("__tgt"),
+                 keepPpm: Long, scale: Long = 1000000L): DataFrame = Materialize.scoped { m =>
+    val toks = m.persist(df.select(col(idCol), targetFilter.as("__tgt"),
         explode(tokens(col(textCol))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = toks.groupBy("tok")
+      .filter(length(col("tok")) > 0))
+    val counts = m.persist(toks.groupBy("tok")
       .agg(count(lit(1)).as("__cr"),
-        sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct")))
     val nVocab = counts.count() // materializes both caches, sizes the pin
     val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
     val gains = counts.crossJoin(broadcast(totals))
@@ -241,7 +231,7 @@ object LangModel {
           .as("__lift"))
     val gainSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
       gains.hint("merge") else broadcast(gains)
-    val result = toks.join(gainSide, "tok")
+    toks.join(gainSide, "tok")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("__lift")).as("__total"))
@@ -249,8 +239,5 @@ object LangModel {
       .withColumn("keep", col("mean_lift_ppm") >= keepPpm)
       .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep"))
       .localCheckpoint()
-    toks.unpersist()
-    counts.unpersist()
-    result
   }
 }

@@ -59,16 +59,15 @@ object Select {
     */
   def tokenBudget(df: DataFrame, idCol: String, weightCol: String,
                   scoreCol: String, budget: Long,
-                  broadcastSafeBuckets: Long = Dedup.BroadcastSafeCorpusRows): DataFrame = {
+                  broadcastSafeBuckets: Long = Dedup.BroadcastSafeCorpusRows
+                 ): DataFrame = Materialize.scoped { m =>
     // NARROW persist: the bucket aggregate and the final join both
     // read the scored stream, and its upstream (typically a
     // tokenize+score pass — measured as the dominant cost at ×32,
     // the LangModel lesson) must run exactly once
-    val base = df.select(col(idCol), col(scoreCol), col(weightCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = base.groupBy(scoreCol)
-      .agg(sum(col(weightCol)).as("__bw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = m.persist(df.select(col(idCol), col(scoreCol), col(weightCol)))
+    val buckets = m.persist(base.groupBy(scoreCol)
+      .agg(sum(col(weightCol)).as("__bw")))
     val nBuckets = buckets.count() // materializes the cache, sizes the pin
     // the bucket prefix window below has NO partitionBy — its single
     // task is domain-bounded work ONLY if the score is a bucketed
@@ -106,14 +105,11 @@ object Select {
     val preSide = if (nBuckets > broadcastSafeBuckets) pre.hint("merge") else broadcast(pre)
     val docWin = Window.partitionBy(scoreCol).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val result = base.join(preSide, Seq(scoreCol)) // inner: pruned buckets drop their docs
+    base.join(preSide, Seq(scoreCol)) // inner: pruned buckets drop their docs
       .withColumn("cum_tokens",
         col("__before") + sum(col(weightCol).cast("long")).over(docWin))
       .filter(col("cum_tokens") <= budget)
       .select(col(idCol), col(scoreCol), col(weightCol), col("cum_tokens"))
-    val out = result.localCheckpoint()
-    buckets.unpersist()
-    base.unpersist()
-    out
+      .localCheckpoint()
   }
 }

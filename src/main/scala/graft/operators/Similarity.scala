@@ -315,14 +315,16 @@ object Similarity {
     * @param allPairs true = NO blocking: every cross-side pair is a
     *        candidate — the brute-forced TRUTH leg of the blocking-
     *        recall certification (q_bitext_recall). O(|X|·|Y|): only
-    *        for a bounded certification universe, never production.
+    *        for a bounded certification universe, never production;
+    *        throws when the Y side has more than
+    *        [[Dedup.BroadcastSafeCorpusRows]] rows.
     * @return (x_id, y_id, cos_ppb, margin_ppm) for mutual-best pairs
     *         with margin ≥ minMarginPpm, one row per surviving pair. */
   def bitextMarginMine(corpus: DataFrame, sideExpr: Column,
                        k: Int = 4, minMarginPpm: Long = 1000000L,
                        nlist: Int = 0, iters: Int = 2,
                        idCol: String = "vec_id", vecCol: String = "embedding",
-                       allPairs: Boolean = false): DataFrame = {
+                       allPairs: Boolean = false): DataFrame = Materialize.scoped { m =>
     require(k >= 1 && minMarginPpm >= 0)
     // nlist = 0 derives cell count by the IVF rule (cells stay ~64
     // rows at every corpus size — the assignCells discipline, which
@@ -360,12 +362,19 @@ object Similarity {
     // right back — the per-pair CPU is invisible to byte-based
     // coalescing) and broadcast the bounded certification side
     // (guide §2.5: a single enormous key is skew AQE cannot split).
+    // The broadcast is bounded: past the broadcast-safe row count the
+    // build would grow with the corpus, so the call refuses up front.
     val joined =
       if (allPairs) {
+        val nY = vecs.filter(!col("__x")).count()
+        require(nY <= Dedup.BroadcastSafeCorpusRows,
+          s"bitextMarginMine(allPairs = true) broadcasts its Y side: $nY rows > " +
+            s"Dedup.BroadcastSafeCorpusRows = ${Dedup.BroadcastSafeCorpusRows}. " +
+            "allPairs is for a bounded certification universe only.")
         val p = math.max(1, corpus.sparkSession.sparkContext.defaultParallelism)
         xs.repartition(p, col("x_id")).join(broadcast(ys), "cid")
       } else xs.join(ys, "cid")
-    val pairs = joined
+    val pairs = m.persist(joined
       .withColumn("cos_ppb",
         floor(when(col("__xn") === 0 || col("__yn") === 0, lit(0.0))
           .otherwise(VectorFunctions.vecDot(col("__xv"), col("__yv")) /
@@ -374,8 +383,7 @@ object Similarity {
       // them here also keeps EVERY div operand nonnegative, where
       // Spark's truncating `div` and DuckDB's flooring `//` agree
       .filter(col("cos_ppb") >= 0)
-      .select(col("x_id"), col("y_id"), col("cos_ppb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("x_id"), col("y_id"), col("cos_ppb")))
     // per-side kNN means over the candidate set, kept as exact longs:
     // sum of the top-k ppb cosines (order-independent), truncated avg
     def kAvg(side: String, other: String, out: String) = {
@@ -396,14 +404,12 @@ object Similarity {
       .orderBy(col("margin_ppm").desc, col("y_id").asc)
     val by = Window.partitionBy(col("y_id"))
       .orderBy(col("margin_ppm").desc, col("x_id").asc)
-    val result = margined
+    margined
       .withColumn("__bx", row_number().over(bx))
       .withColumn("__by", row_number().over(by))
       .filter(col("__bx") === 1 && col("__by") === 1 &&
         col("margin_ppm") >= minMarginPpm)
       .select(col("x_id"), col("y_id"), col("cos_ppb"), col("margin_ppm"))
       .localCheckpoint()
-    pairs.unpersist()
-    result
   }
 }

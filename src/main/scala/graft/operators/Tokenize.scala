@@ -245,7 +245,7 @@ object Tokenize {
     * lesson: 100 rounds of HOF transforms would otherwise stack into
     * one giant plan). */
   def trainBpeDistributed(df: DataFrame, textCol: String,
-                          numMerges: Int = 100): Seq[(String, String)] = {
+                          numMerges: Int = 100): Seq[(String, String)] = Materialize.scoped { m =>
     val spark = df.sparkSession
     import spark.implicits._
     // structural-only expr (no data-derived literals embedded)
@@ -253,11 +253,10 @@ object Tokenize {
     val adjPairs = expr(
       "transform(sequence(0, size(syms) - 2), " +
         "i -> struct(element_at(syms, i + 1) as l, element_at(syms, i + 2) as r))")
-    var words = df.select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
+    var words = m.checkpoint(df.select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(charSplit.as("syms"), col("n"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint()
+      .filter(size(col("syms")) >= 2))
     val merges = mutable.ArrayBuffer[(String, String)]()
     var continue = true
     while (merges.size < numMerges && continue) {
@@ -279,12 +278,11 @@ object Tokenize {
               .otherwise(concat(acc, array(s)))).as("syms"),
           col("n"))
           .filter(size(col("syms")) >= 2) // fully-merged words can't pair again
-        val next = applied.localCheckpoint()
-        words.unpersist()
+        val next = m.checkpoint(applied)
+        m.release(words)
         words = next
       }
     }
-    words.unpersist()
     merges.toSeq
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.multimodal.Media
-import graft.operators.{Dedup, LangModel, Select, Similarity, Split}
+import graft.operators.{Dedup, LangModel, Materialize, Select, Similarity, Split}
 import graft.sources.Tables
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1340,7 +1340,7 @@ object QueriesText {
         .orderBy("media_id")
     }),
 
-    "q_media_phash" -> ((s, d) => {
+    "q_media_phash" -> ((s, d) => Materialize.scoped { m =>
       // perceptual-hash image dedup: REAL ImageIO decode → 64-bit
       // aHash (8×8 block means vs global mean, exact integer
       // cross-products) → canonical-per-cluster verdicts. Clustering
@@ -1357,10 +1357,8 @@ object QueriesText {
       // argument: a faked decode cannot produce formula-matching
       // hashes from compressed containers), brute-forces the full
       // hash graph, and walks the same closure via recursive CTE.
-      val sig = Media.aHash(s, Media.asMediaTable(Tables(s, d).documents))
-        .toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nodes = sig.groupBy("ahash").agg(min(col("media_id")).as("node"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sig = m.persist(Media.aHash(s, Media.asMediaTable(Tables(s, d).documents)).toDF())
+      val nodes = m.persist(sig.groupBy("ahash").agg(min(col("media_id")).as("node")))
       val banded = nodes.select(col("node"),
         posexplode(array((0 until 4).map(b =>
           expr(s"shiftright(ahash, ${16 * b}) & 65535")): _*)).as(Seq("band", "bv")))
@@ -1378,16 +1376,13 @@ object QueriesText {
         .select(col("id_a"), col("id_b"))
       val comp = graft.operators.Components.connectedComponents(edges)
         .withColumnRenamed("node", "__cn")
-      val out = sig.join(nodes, "ahash")
+      sig.join(nodes, "ahash")
         .join(comp, col("node") === col("__cn"), "left")
         .withColumn("canonical_id", coalesce(col("component"), col("node")))
         .select(col("media_id"), col("canonical_id"),
           (col("media_id") === col("canonical_id")).as("is_canonical"))
         .orderBy("media_id")
         .localCheckpoint()
-      sig.unpersist()
-      nodes.unpersist()
-      out
     }),
 
     "q_media_thumbs" -> ((s, d) => {

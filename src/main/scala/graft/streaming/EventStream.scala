@@ -409,27 +409,28 @@ object EventStream {
                           eventsDir: String, docsDir: String)
                          (pipeline: (DataFrame, DataFrame) => DataFrame) =
     sinkForeachBatch(events) { (batch, batchId) =>
-      batch.persist()
-      // idempotent on replay: foreachBatch is at-least-once, so the
-      // raw append is keyed by batchId and OVERWRITTEN on redelivery
-      // — a retried batch replaces its own partition instead of
-      // double-counting events in every later recompute
-      batch.write.mode("overwrite").parquet(s"$eventsDir/batch_$batchId")
-      val dirty = batch.select("user_id").distinct()
-      val history = spark.read.parquet(s"$eventsDir/batch_*")
-        .join(dirty, Seq("user_id"), "left_semi")
-      val recomputed = pipeline(history, customer)
-      val existing = latestCompleteVersion(spark, docsDir, below = Some(batchId)) match {
-        case Some(prev) =>
-          spark.read.parquet(prev.toString).join(dirty, Seq("user_id"), "left_anti")
-        case None => recomputed.limit(0)
+      graft.operators.Materialize.scoped { m =>
+        m.persist(batch)
+        // idempotent on replay: foreachBatch is at-least-once, so the
+        // raw append is keyed by batchId and OVERWRITTEN on redelivery
+        // — a retried batch replaces its own partition instead of
+        // double-counting events in every later recompute
+        batch.write.mode("overwrite").parquet(s"$eventsDir/batch_$batchId")
+        val dirty = batch.select("user_id").distinct()
+        val history = spark.read.parquet(s"$eventsDir/batch_*")
+          .join(dirty, Seq("user_id"), "left_semi")
+        val recomputed = pipeline(history, customer)
+        val existing = latestCompleteVersion(spark, docsDir, below = Some(batchId)) match {
+          case Some(prev) =>
+            spark.read.parquet(prev.toString).join(dirty, Seq("user_id"), "left_anti")
+          case None => recomputed.limit(0)
+        }
+        // new snapshot dir — the read side (v_<prev>) is never touched,
+        // so a failure here cannot destroy prior state
+        existing.unionByName(recomputed)
+          .write.mode("overwrite").parquet(s"$docsDir/v_$batchId")
+        pruneVersions(spark, docsDir, keepFrom = batchId - 1)
       }
-      // new snapshot dir — the read side (v_<prev>) is never touched,
-      // so a failure here cannot destroy prior state
-      existing.unionByName(recomputed)
-        .write.mode("overwrite").parquet(s"$docsDir/v_$batchId")
-      pruneVersions(spark, docsDir, keepFrom = batchId - 1)
-      batch.unpersist()
     }
 
   /** Latest complete (_SUCCESS-bearing) docs snapshot written by

@@ -23,6 +23,18 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Release a localCheckpoint'd frame's blocks: unpersist the RDD
+    * under its LogicalRDD leaf (the frame is not in the CacheManager, so
+    * `Dataset.unpersist` frees nothing). Calls `SparkContext.unpersistRDD`
+    * (`private[spark]`) directly: `RDD.unpersist` does the same but logs
+    * a lineage-truncation warning on every deliberate release. */
+  def releaseCheckpoint(cp: Dataset[_]): Unit = analyzedPlan(cp) match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
+    case p => throw new IllegalArgumentException(
+      s"not a checkpointed frame (plan root ${p.nodeName})")
+  }
+
   /** Re-assert a hash-partitioning CLAIM on a localCheckpoint'd frame.
     *
     * Iterative operators (BFS's reached-set merge) keep their state
@@ -46,11 +58,11 @@ object GraftBridge {
     * warrants each partition is ASCENDING on `cols` (e.g. the frame
     * came out of a sort-merge join on exactly them) — the ordering
     * claim lets the next sort-merge join skip re-sorting the big
-    * side. Returns the input unchanged when the plan is not a
-    * LogicalRDD. */
-  def checkpointHashPartitioned(df: DataFrame, cols: Seq[String],
-                                sortedWithinPartitions: Boolean = false): DataFrame = {
-    val cp = df.localCheckpoint()
+    * side. The returned frame reads the same blocks as `cp`, so
+    * releasing `cp`'s checkpoint releases it too. Returns `cp`
+    * unchanged when its plan is not a LogicalRDD. */
+  def claimHashPartitioned(cp: DataFrame, cols: Seq[String],
+                           sortedWithinPartitions: Boolean = false): DataFrame = {
     val ds = cp.asInstanceOf[classic.Dataset[_]]
     ds.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

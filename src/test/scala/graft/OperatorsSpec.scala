@@ -245,7 +245,7 @@ class EmptyInputSpec extends AnyFunSuite {
 
   test("round-2 operators tolerate empty inputs") {
     val emptyEdges = Seq.empty[(Long, Long)].toDF("c", "p")
-    assert(Hierarchy.ancestorsDoubling(emptyEdges, "c", "p").count() == 0)
+    assert(Hierarchy.ancestors(emptyEdges, "c", "p").count() == 0)
     assert(Hierarchy.ancestorArrays(
       Hierarchy.ancestors(emptyEdges, "c", "p")).count() == 0)
 
@@ -309,37 +309,11 @@ class DepthOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("ancestorsDoubling matches the linear walk on a chain") {
-    val edges = Seq((4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)).toDF("c", "p")
-    val lin = Hierarchy.ancestors(edges, "c", "p")
-      .as[(Long, Long, Int)].collect().toSet
-    val dbl = Hierarchy.ancestorsDoubling(edges, "c", "p")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(dbl == lin)
-    assert(dbl.contains((4L, 0L, 4)))
-  }
-
-  test("ancestorsAdaptive: linear-phase-only, post-switch, and deep-chain all match the walk") {
-    // a 12-deep chain: switchDepth=4 forces the doubling flip (4
-    // linear rounds + ~2 doubling rounds); switchDepth=20 stays
-    // linear-only; both must equal the plain walk's closure exactly
-    val edges = (1L to 12L).map(i => (i, i - 1)).toDF("c", "p")
-    val lin = Hierarchy.ancestors(edges, "c", "p", maxDepth = 20)
-      .as[(Long, Long, Int)].collect().toSet
-    val flip = Hierarchy.ancestorsAdaptive(edges, "c", "p", maxDepth = 64, switchDepth = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    val noFlip = Hierarchy.ancestorsAdaptive(edges, "c", "p", maxDepth = 64, switchDepth = 20)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(flip == lin, "post-switch hybrid equals the linear walk")
-    assert(noFlip == lin, "shallow-phase hybrid equals the linear walk")
-    assert(flip.contains((12L, 0L, 12)))
-  }
-
-  test("ancestorsDoubling keeps MIN depth on a diamond DAG") {
+  test("ancestors keeps MIN depth on a diamond DAG") {
     // 3 -> {2a, 2b} -> 1 plus a shortcut 3 -> 1: min path length is 1
     val edges = Seq((3L, 21L), (3L, 22L), (21L, 1L), (22L, 1L), (3L, 1L))
       .toDF("c", "p")
-    val m = Hierarchy.ancestorsDoubling(edges, "c", "p")
+    val m = Hierarchy.ancestors(edges, "c", "p")
       .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(m((3L, 1L)) == 1)
     assert(m((3L, 21L)) == 1 && m((21L, 1L)) == 1)
@@ -597,42 +571,40 @@ class CacheHygieneSpec extends AnyFunSuite {
   import spark.implicits._
 
   // Iterative/persisting operators must release every intermediate
-  // cache before returning: the only block allowed to survive a call
-  // is the operator's own checkpointed result (cleaned by the
-  // ContextCleaner once unreferenced). Previously each call leaked
-  // maxDepth frontier caches / the signature cache (VERDICT r1 #3).
-  private def persisted = spark.sparkContext.getPersistentRDDs.size
+  // cache and checkpoint before returning, also when they throw: the
+  // only block allowed to survive a call is the operator's own
+  // checkpointed result, and a trainer that returns driver-side values
+  // leaves none. Counted by RDD id — the persistent RDDs `body`
+  // registered that are still registered after it — so blocks from
+  // earlier tests, which the ContextCleaner reaps at GC time, cannot
+  // mask a leak.
+  private def leftBy(body: => Any): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+  }
 
   test("Hierarchy.ancestors releases all frontier caches") {
     val edges = (10L until 200L).map(k => (k, k / 10)).toDF("child", "parent")
-    val before = persisted
-    val closure = graft.operators.Hierarchy.ancestors(edges, "child", "parent", maxDepth = 8)
-    assert(closure.count() > 0)
-    assert(persisted <= before + 1, s"leaked caches: $before -> $persisted")
+    val left = leftBy {
+      val closure = graft.operators.Hierarchy.ancestors(edges, "child", "parent", maxDepth = 8)
+      assert(closure.count() > 0)
+    }
+    assert(left <= 1, s"leaked caches: $left")
   }
 
   test("Components.connectedComponents bounds its checkpoint footprint") {
     // star contraction localCheckpoints every intermediate (the edge
     // plan would otherwise be re-embedded per round and the plan
-    // string alone OOMs at high diameter); checkpoint blocks are
-    // ContextCleaner-reaped on GC rather than explicitly unpersisted,
-    // so the footprint is bounded per call, not zero
+    // string alone OOMs at high diameter); each call releases them all
+    // and keeps only its checkpointed result
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val before = persisted
-    val labels = graft.operators.Components.connectedComponents(edges)
-    assert(labels.count() == 5)
-    val perCall = persisted - before
-    assert(perCall <= 12, s"checkpoint footprint too large: $before -> $persisted")
-    // a second call gets the SAME absolute per-call budget — not a
-    // bound relative to the first call's footprint: the ContextCleaner
-    // reaps asynchronously, so the instantaneous count wobbles with GC
-    // timing and a lucky-small first call (e.g. 1 after an eager reap)
-    // would make a relative slack tighter than the budget the first
-    // assertion itself grants (observed flake: first call 1, second 8)
-    val mid = persisted
-    graft.operators.Components.connectedComponents(edges).count()
-    assert(persisted - mid <= 12,
-      s"cross-call accumulation: $mid -> $persisted (first call: $perCall)")
+    for (call <- 1 to 2) {
+      val left = leftBy {
+        assert(graft.operators.Components.connectedComponents(edges).count() == 5)
+      }
+      assert(left <= 1, s"call $call left $left persistent RDDs")
+    }
   }
 
   test("Dedup.minHashLsh / ngramJaccard release the signature caches") {
@@ -641,9 +613,38 @@ class CacheHygieneSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog today!"),
       (3L, "entirely different words about distributed query engines"))
       .toDF("doc_id", "text")
-    val before = persisted
-    Dedup.minHashLsh(docs, "doc_id", "text").count()
-    Dedup.ngramJaccard(docs, "doc_id", "text").count()
-    assert(persisted <= before + 2, s"leaked caches: $before -> $persisted")
+    val left = leftBy {
+      Dedup.minHashLsh(docs, "doc_id", "text").count()
+      Dedup.ngramJaccard(docs, "doc_id", "text").count()
+    }
+    assert(left <= 2, s"leaked caches: $left")
+  }
+
+  test("Dedup.bruteForceJaccard releases its shingle cache when the size gate throws") {
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon"))
+      .toDF("doc_id", "text")
+    val left = leftBy {
+      intercept[IllegalArgumentException](
+        Dedup.bruteForceJaccard(docs, "doc_id", "text", shingleN = 2, threshold = 0.5,
+          maxDocs = 1))
+    }
+    assert(left == 0, s"leaked caches: $left")
+  }
+
+  test("Tokenize.trainBpeDistributed leaves no persistent RDD") {
+    val docs = Seq("the cat sat on the mat", "the cat ate the rat", "that hat")
+      .toDF("text")
+    val left = leftBy {
+      val merges = Tokenize.trainBpeDistributed(docs, "text", numMerges = 6)
+      assert(merges.size >= 2, s"the merge loop must run several rounds: $merges")
+    }
+    assert(left == 0, s"leaked checkpoints: $left")
+  }
+
+  test("Infer.trainLogistic leaves no persistent RDD") {
+    val docs = Seq((1L, "good fine great", true), (2L, "bad poor awful", false),
+      (3L, "great good", true), (4L, "awful bad", false)).toDF("doc_id", "text", "y")
+    val left = leftBy(Infer.trainLogistic(docs, "doc_id", "text", col("y")))
+    assert(left == 0, s"leaked checkpoints: $left")
   }
 }

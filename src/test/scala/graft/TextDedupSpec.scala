@@ -539,6 +539,17 @@ class SimilaritySpec extends AnyFunSuite {
       s"singleton cells put every pair cross-cell — recall must read 0, got $sharded")
   }
 
+  test("bitextMarginMine(allPairs) refuses a Y side past the broadcast bound") {
+    // one X row against 65,537 Y rows: the broadcast Y side would be
+    // one row past Dedup.BroadcastSafeCorpusRows
+    val emb = spark.range(0L, 65538L)
+      .select(col("id").as("vec_id"), array(lit(1f), lit(0f)).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      Similarity.bitextMarginMine(emb, col("vec_id") === 0L, allPairs = true))
+    assert(e.getMessage.contains("65537 rows") &&
+      e.getMessage.contains("BroadcastSafeCorpusRows = 65536"), e.getMessage)
+  }
+
   test("bitextMarginMine: sides never mix and the threshold gates") {
     val emb = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
     val out = Similarity.bitextMarginMine(emb, pmod(col("vec_id"), lit(2)) === 0,

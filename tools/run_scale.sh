@@ -269,7 +269,7 @@ bench curate_lossless_x100.json target/scale/x100 \
   SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X100 SPARK_GRAFT_CURATE_KEEPPPM=$KEEPPPM_X100
 # (the per-chunk merge_x100 above already rebuilt + committed the tier)
 
-# r17: the A/B-stress extras below (closure strategies, as-of hot-key
+# r17: the A/B-stress extras below (as-of hot-key
 # suite incl. the x1000ev/x200emb corpus gens, IVF recall sweeps, bloom
 # A/B, incremental-history axis, partitions matrix) re-measure code
 # UNTOUCHED this round — their committed numbers live in SCALE_r16.
@@ -277,17 +277,6 @@ bench curate_lossless_x100.json target/scale/x100 \
 # the tier evidence the verdict flagged; run without the flag to
 # regenerate them (idempotent — existing dumps are reused).
 if [ -z "$SPARK_GRAFT_SKIP_EXTRAS" ]; then
-# closure-strategy A/B (VERDICT r8 next-round #5): the x100 linear-walk
-# run above is the control; re-run the two closure queries with the
-# doubling and adaptive strategies and let scale_report fold the
-# spill/wall comparison into the artifact — either outcome is the
-# measurement.
-for strat in doubling adaptive; do
-  bench closure_${strat}_x100.json target/scale/x100 \
-    SPARK_GRAFT_ONLY=q_ancestor_arrays,q_hierarchy \
-    SPARK_GRAFT_SHUFFLE_PARTITIONS=128 SPARK_GRAFT_CLOSURE=$strat
-done
-
 # as-of hot-key stress (VERDICT r8 next-round #7): 30% of the x10
 # events remapped onto ONE user (SkewGen), then the two as-of forms
 # measured against the uniform x10 control. AsOfJoinExec hash-clusters

@@ -506,36 +506,6 @@ def main(out_path):
         with open("target/bloom_x32.json") as fh:
             report["bloom_join_ab"] = json.load(fh)
 
-    # ---- closure-strategy A/B (x100 corpus) ----
-    # control = the linear-walk entries in the x100 core run; doubling/
-    # adaptive re-run just the closure queries with SPARK_GRAFT_CLOSURE
-    closure = {}
-    for strat in ("doubling", "adaptive"):
-        path = f"target/closure_{strat}_x100.json"
-        if os.path.exists(path):
-            with open(path) as fh:
-                closure[strat] = json.load(fh)["queries"]
-    if closure and runs.get(100):
-        ab = {}
-        for q in ("q_ancestor_arrays", "q_hierarchy"):
-            if q not in runs[100]:
-                continue
-            ab[q] = {"linear": entry_at(runs[100][q])}
-            for strat, data in closure.items():
-                if q in data:
-                    ab[q][strat] = entry_at(data[q])
-        report["closure_strategy_ab_x100"] = {
-            "note": (
-                "Same x100 corpus and partitioning; only the closure "
-                "strategy differs (linear frontier walk vs path doubling vs "
-                "the adaptive hybrid that flips to doubling past depth 4). "
-                "The question on the table (VERDICT r8 #5): does doubling "
-                "cut the linear walk's external-sort spill at this depth, "
-                "or does shuffling the whole closure per round cost more "
-                "than the saved rounds? Both outcomes are evidence; the "
-                "numbers decide."),
-            "queries": ab}
-
     # ---- as-of hot-key stress (x10 corpus, 30% single-user skew) ----
     if os.path.exists("target/asof_skew_x10.json") and full.get(10):
         with open("target/asof_skew_x10.json") as fh:
